@@ -45,12 +45,7 @@ object EtlMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try {
-      val s = Pipeline.run(spark, config)
-      println(
-        s"""{"total":${s.total},"parsed":${s.parsed},"invalid":${s.invalid},""" +
-          s""""duplicates":${s.duplicates},"inserted":${s.inserted},""" +
-          s""""duplicatesFile":${s.duplicatesFileRows}}""")
-    } finally spark.stop()
+    try println(Pipeline.run(spark, config).toJson)
+    finally spark.stop()
   }
 }

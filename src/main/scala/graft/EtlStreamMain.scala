@@ -47,8 +47,7 @@ object EtlStreamMain {
       checkpointDir = s"$outputDir/checkpoint")
     if (rest.contains("--follow")) q.awaitTermination()
     else { q.processAllAvailable(); q.stop() } // drain-and-exit default
-    val s = counters.snapshot
-    println(s"""{"total":${s.total},"parsed":${s.parsed},"invalid":${s.invalid},"duplicates":${s.duplicates},"inserted":${s.inserted}}""")
+    println(counters.snapshot.toJson)
     spark.stop()
   }
 }

@@ -46,9 +46,6 @@ object CsvSource {
         if (m.contains(k)) m else m + (k -> i)
     }
 
-  /** Read the CSV into line_number + raw_* string columns (one per required
-    * column, in canonical order). Throws IllegalArgumentException when a
-    * required column is absent from the header. */
   /** Files a path/glob resolves to (one level of directory expansion) —
     * shared by the single-file guard in [[read]] and the shard listing in
     * [[readSharded]] so both always agree on what "the input files" are. */
@@ -65,6 +62,9 @@ object CsvSource {
     }
   }
 
+  /** Read the CSV into line_number + raw_* string columns (one per required
+    * column, in canonical order). Throws IllegalArgumentException when a
+    * required column is absent from the header. */
   def read(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
     // The in-place header drop below assumes exactly one input file
     // (partition 0 = byte 0 of THE file). A directory or glob would

@@ -20,8 +20,6 @@ package graft.etl
   * @param enableTimeZoneConversion EST→UTC toggle (EtlSettingsDto.cs:36-43)
   * @param inputTimeZoneId       IANA zone id; the reference's Windows id
   *                              "Eastern Standard Time" == America/New_York
-  * @param batchSize             write batch size; surfaces as the JDBC
-  *                              batchsize option (Etl.BatchSize = 5000)
   */
 final case class EtlConfig(
     inputCsvPath: String,
@@ -30,5 +28,4 @@ final case class EtlConfig(
     delimiter: String = ",",
     inputDateTimeFormat: Option[String] = None,
     enableTimeZoneConversion: Boolean = true,
-    inputTimeZoneId: String = "America/New_York",
-    batchSize: Int = 5000)
+    inputTimeZoneId: String = "America/New_York")

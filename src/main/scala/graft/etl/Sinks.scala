@@ -35,14 +35,10 @@ object Sinks {
     col("tip_amount"),
     col("travel_time_seconds").as("TravelTimeSeconds"))
 
-  /** Project any annotated frame to the dbo.Trips column shape (shared by
-    * the batch inserted sink and the streaming foreachBatch sink, whose
-    * "inserted" predicate additionally consults cross-batch seen-key
-    * state). */
-  def selectTripColumns(df: DataFrame): DataFrame = df.select(tripCols: _*)
-
+  /** Inserted rows in the dbo.Trips column shape (the batch pipeline's
+    * and the streaming taxi sink's table writes). */
   def insertedRows(annotated: DataFrame): DataFrame =
-    selectTripColumns(annotated.filter(Stats.statusCol === "inserted"))
+    annotated.filter(Stats.statusCol === "inserted").select(tripCols: _*)
 
   def writeInserted(annotated: DataFrame, path: String): Unit =
     insertedRows(annotated).write.mode(SaveMode.Overwrite).parquet(path)
@@ -58,14 +54,12 @@ object Sinks {
       .option("batchsize", batchSize)
       .save()
 
-  /** The duplicates-file shape: LineNumber + the RAW pre-parse strings. */
-  def selectDuplicateColumns(df: DataFrame): DataFrame =
-    df.select(
+  /** Duplicate rows in the duplicates-file shape: LineNumber + the RAW
+    * pre-parse strings. */
+  def duplicateRows(annotated: DataFrame): DataFrame =
+    annotated.filter(Stats.statusCol === "duplicate").select(
       col(CsvSource.LineNumberCol).as("LineNumber") +:
         CsvSource.RequiredColumns.map(c => col(rawCol(c)).as(c)): _*)
-
-  def duplicateRows(annotated: DataFrame): DataFrame =
-    selectDuplicateColumns(annotated.filter(Stats.statusCol === "duplicate"))
 
   /** Append-across-runs, like the reference: CsvDuplicateTripWriter.cs:56-109
     * opens duplicates.csv in append mode and writes the header only when
@@ -75,13 +69,8 @@ object Sinks {
     * order, and the whole file is rewritten via a temp dir + atomic-ish
     * rename — so the final content is byte-equivalent to a true append
     * with one header. No collect: rows never pass through the driver. */
-  def writeDuplicates(annotated: DataFrame, path: String): Unit =
-    appendDuplicateRows(duplicateRows(annotated), path)
-
-  /** Append pre-shaped duplicate rows (LineNumber + raw columns) to the
-    * single-file duplicates CSV — the write half of [[writeDuplicates]],
-    * callable directly from the streaming foreachBatch sink. */
-  def appendDuplicateRows(fresh: DataFrame, path: String): Unit = {
+  def writeDuplicates(annotated: DataFrame, path: String): Unit = {
+    val fresh = duplicateRows(annotated)
     val spark = fresh.sparkSession
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)

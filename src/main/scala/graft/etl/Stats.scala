@@ -25,7 +25,13 @@ object Stats {
       invalid: Long,
       duplicates: Long,
       inserted: Long,
-      duplicatesFileRows: Long)
+      duplicatesFileRows: Long) {
+    /** The one-line JSON the CLI mains print. */
+    def toJson: String =
+      s"""{"total":$total,"parsed":$parsed,"invalid":$invalid,""" +
+        s""""duplicates":$duplicates,"inserted":$inserted,""" +
+        s""""duplicatesFile":$duplicatesFileRows}"""
+  }
 
   /** Row status derived from the annotation columns; usable as a column in
     * relational results too. */
@@ -39,22 +45,14 @@ object Stats {
 
   /** Single-pass aggregation to the six counters. */
   def compute(annotated: DataFrame): EtlStats = {
-    val parseErr = col(ParseValidate.ParseErrorCol).isNotNull
-    val normErr = col(Normalize.NormErrorCol).isNotNull
-    val dup = !parseErr && !normErr && col(Dedup.DupRankCol) > 1
-    val ins = !parseErr && !normErr && col(Dedup.DupRankCol) === 1
-    val r = annotated.agg(
-      count(lit(1)).as("total"),
-      cnt(!parseErr).as("parsed"),
-      cnt(parseErr || normErr).as("invalid"),
-      cnt(dup).as("duplicates"),
-      cnt(ins).as("inserted")).head()
-    EtlStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-      duplicatesFileRows = r.getLong(3))
+    val r = asDataFrame(annotated).head()
+    EtlStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4), r.getLong(5))
   }
 
   /** The same six counters as a single-row DataFrame (for the driver's
-    * relational correctness checks). */
+    * relational correctness checks). `duplicates_file` repeats the
+    * duplicates aggregate, which the planner computes once. */
   def asDataFrame(annotated: DataFrame): DataFrame = {
     val parseErr = col(ParseValidate.ParseErrorCol).isNotNull
     val normErr = col(Normalize.NormErrorCol).isNotNull

@@ -62,12 +62,13 @@ class StreamingOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
     val colIdx = graft.etl.CsvSource.RequiredColumns.zipWithIndex.toMap
-    val out = StreamingOps.taxiEtlStream(
+    val out = tmpDir("taxistreamsmall")
+    val counters = new StreamingOps.TaxiStreamCounters
+    val q = StreamingOps.runTaxiEtlStream(
       input.toDS().toDF("value"),
-      graft.etl.EtlConfig(inputCsvPath = "", duplicatesCsvPath = "", insertedPath = ""),
-      colIdx)
-    val q = out.writeStream.format("memory")
-      .queryName("taxi_stream_out").outputMode(OutputMode.Append()).start()
+      graft.etl.EtlConfig(inputCsvPath = "",
+        duplicatesCsvPath = s"$out/duplicates", insertedPath = s"$out/trips"),
+      colIdx, s"$out/seen_keys", counters, s"$out/ckpt")
     try {
       input.addData(
         "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47",
@@ -78,11 +79,15 @@ class StreamingOpsSpec extends SparkSpec {
       // second batch: same key again -> state drops it
       input.addData("01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,0.1,N,9,9,1,1")
       q.processAllAvailable()
-      val rows = spark.table("taxi_stream_out").collect()
+      val rows = StreamingOps.committedTrips(spark, s"$out/trips").collect()
       assert(rows.length == 1)
-      assert(rows(0).getAs[java.sql.Timestamp]("pickup_utc") ==
+      assert(rows(0).getAs[java.sql.Timestamp]("tpep_pickup_datetime") ==
         java.sql.Timestamp.valueOf("2020-01-01 05:28:15")) // EST->UTC applied
-      assert(rows(0).getAs[Int]("travel_time_seconds") == 288)
+      assert(rows(0).getAs[Int]("TravelTimeSeconds") == 288)
+      // total 4: the blank line is not counted; parsed 3 and invalid 1:
+      // `bad-date` fails parse; duplicates 2: one within the first batch,
+      // one across batches; inserted 1; duplicates-file rows = duplicates
+      assert(counters.snapshot == graft.etl.Stats.EtlStats(4, 3, 1, 2, 1, 2))
     } finally q.stop()
   }
 
@@ -227,6 +232,69 @@ class StreamingOpsSpec extends SparkSpec {
     val dupCsv = spark.read.option("header", "true").csv(dups)
     assert(dupCsv.count() == 15)
     assert(dupCsv.columns.head == "LineNumber")
+  }
+
+  test("taxi sink is exactly-once on in-test lines: crash at every boundary, matches Pipeline.run") {
+    import spark.implicits._
+    val lines = Seq(
+      // batch 0: two winners, an in-batch duplicate, a parse failure
+      "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47",
+      "01/01/2020 01:00:00 AM,01/01/2020 01:10:00 AM,2,3.4,Y,10,20,30,4",
+      "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,9.9,Y,1,2,3,4",
+      "bad-date,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47",
+      // batch 1: a duplicate of batch 0, a normalize failure (flag), a winner
+      "01/01/2020 01:00:00 AM,01/01/2020 01:10:00 AM,2,0.5,N,1,1,1,1",
+      "01/02/2020 03:00:00 AM,01/02/2020 03:05:00 AM,1,1.0,X,1,2,3,0",
+      "01/02/2020 04:00:00 AM,01/02/2020 04:30:00 AM,3,5.0,N,5,6,20,2",
+      // batch 2: duplicates of batches 1 and 0 around a winner
+      "01/02/2020 04:00:00 AM,01/02/2020 04:30:00 AM,3,7.0,Y,7,8,9,1",
+      "01/03/2020 10:00:00 AM,01/03/2020 10:20:00 AM,1,2.0,N,3,4,10,1",
+      "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,0.1,N,9,9,1,1")
+    val colIdx = graft.etl.CsvSource.RequiredColumns.zipWithIndex.toMap
+    val ref = tmpDir("taxihermref")
+    val csv = new java.io.File(ref, "trips.csv")
+    java.nio.file.Files.write(csv.toPath,
+      (graft.etl.CsvSource.RequiredColumns.mkString(",") +: lines)
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val config = graft.etl.EtlConfig(inputCsvPath = csv.getPath,
+      duplicatesCsvPath = s"$ref/duplicates", insertedPath = s"$ref/trips")
+    val expected = graft.etl.Pipeline.run(spark, config)
+    assert(expected == graft.etl.Stats.EtlStats(10, 9, 2, 4, 4, 4))
+
+    val frames = Seq(0 until 4, 4 until 7, 7 until 10).zipWithIndex
+      .map { case (idx, b) =>
+        (b.toLong, StreamingOps.annotateTaxiLines(
+          idx.map(i => (i + 1L, lines(i))).toDF("line_number", "value"),
+          config, colIdx))
+      }
+    val out = tmpDir("taxihermcrash")
+    val (trips, dups, seen) = (s"$out/trips", s"$out/duplicates", s"$out/seen_keys")
+    var counters = new StreamingOps.TaxiStreamCounters
+    def processor(fp: String => Unit) = {
+      counters = new StreamingOps.TaxiStreamCounters
+      new StreamingOps.TaxiStreamProcessor(trips, dups, seen, counters,
+        faultPoint = fp)
+    }
+    crashReplayDrive[StreamingOps.TaxiStreamProcessor](frames,
+      Seq("after-inserted", "after-seen", "after-dupstate", "after-csv",
+        "after-marker"),
+      processor)((p, b, df) => p.apply(df, b))(_.close())
+    assert(counters.snapshot == expected)
+    // a restart over the finished log: counters from the markers alone,
+    // the replay of a committed batch a no-op
+    val pf = processor(_ => ())
+    try pf.apply(frames.last._2, frames.last._1) finally pf.close()
+    assert(counters.snapshot == expected)
+
+    def keys(df: org.apache.spark.sql.DataFrame) = df
+      .select("tpep_pickup_datetime", "tpep_dropoff_datetime", "passenger_count")
+      .collect().map(_.toSeq).toSeq
+    val streamed = keys(StreamingOps.committedTrips(spark, trips))
+    assert(streamed.length == streamed.toSet.size, s"double-applied batch: $streamed")
+    assert(streamed.toSet == keys(spark.read.parquet(config.insertedPath)).toSet)
+    def csvRows(path: String) = spark.read.option("header", "true").csv(path)
+      .collect().map(_.toSeq).toSeq
+    assert(csvRows(dups) == csvRows(config.duplicatesCsvPath))
   }
 
   test("taxi seen-keys legacy flat layout fails loudly at bootstrap") {
